@@ -1,17 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-- ``cosine_topk``: brute-force exact top-k — the O(N·M) baseline;
-  fine for probe sets, the oracle for recall measurements.
-- ``lsh_topk``: random-hyperplane LSH — bucket vectors by sign
-  pattern, search only bucket collisions; the 100 TB path where the
-  full cross product is impossible. Hyperplanes are deterministic
-  (seeded from index), so results are reproducible.
+Exact search:
+- ``cosine_topk_exact_arrow``: THE exact top-k kernel on query paths —
+  a bounded per-batch k-best inside one ``mapInArrow``, bit-identical
+  to ``cosine_topk`` (same rows, same ``cos`` doubles).
+- ``cosine_topk``: the same top-k as built-in column expressions
+  (zip_with/aggregate folds over array<double>, JVM-side); the
+  reference the kernel is tested against.
 
-All arithmetic is built-in column expressions (zip_with/aggregate
-over array<double>), JVM-side; dot products never cross into Python.
-For very wide vectors a Pandas-UDF BLAS path can be swapped in, but
-the expression form keeps plans fusable and is plenty at 64-1024 dims.
+Approximate search (``lsh_topk``, ``ivf_topk``, ``pq_topk``) is the
+path where the full cross product is impossible; LSH hyperplanes are
+deterministic (seeded from index), so results are reproducible.
 """
 
 from __future__ import annotations
@@ -61,20 +60,6 @@ def _unrolled_dot(a: str, b: str, dims: int) -> Column:
     acc = F.lit(0.0)
     for i in range(1, dims + 1):
         acc = acc + F.element_at(F.col(a), i) * F.element_at(F.col(b), i)
-    return acc
-
-
-def _unrolled_d2(a: str, b: str, dims: int) -> Column:
-    """Squared L2 distance, unrolled like ``_unrolled_dot`` (the fold
-    zip_with((x-y)*(x-y)) then left-sum, reproduced term by term)."""
-    if dims > _UNROLL_MAX_DIMS:
-        return F.aggregate(F.zip_with(F.col(a), F.col(b),
-                                      lambda x, y: (x - y) * (x - y)),
-                           F.lit(0.0), lambda acc, x: acc + x)
-    acc = F.lit(0.0)
-    for i in range(1, dims + 1):
-        d = F.element_at(F.col(a), i) - F.element_at(F.col(b), i)
-        acc = acc + d * d
     return acc
 
 
@@ -269,65 +254,12 @@ def embedding_neardup_pairs(
     )
 
 
-def cosine_topk_arrow(
-    queries: DataFrame, items: DataFrame,
-    query_id: str = "vec_id", item_id: str = "vec_id",
-    query_vec: str = "embedding", item_vec: str = "embedding",
-    k: int = 5, max_queries: int = 100_000,
-) -> DataFrame:
-    """Arrow/numpy brute-force top-k: the wide-vector scale path.
-
-    The expression-based ``cosine_topk`` keeps bit-exact parity with
-    the SQL oracle but evaluates higher-order functions interpreted
-    (no codegen); this variant ships the query matrix to every
-    partition and runs one BLAS matmul per Arrow batch — 10-100x
-    faster at high dims/large k, with float summation order differing
-    in the last ulp (hence rows-only verification, not hash parity).
-
-    The query side is ``collect()``ed to the driver and broadcast:
-    bounded-probe-set-only by design. ``max_queries`` guards against
-    accidentally feeding the full corpus as queries (use ``ivf_topk``
-    or ``lsh_topk`` for corpus-vs-corpus search).
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.limit(max_queries + 1).select(query_id, query_vec).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_arrow collects the query set to the driver; got "
-            f"more than max_queries={max_queries} rows — this path is for "
-            f"bounded probe sets. Use ivf_topk/lsh_topk for large query sides "
-            f"or raise max_queries deliberately.")
-    spark0 = queries.sparkSession
-    if not q_rows:  # empty probe set: empty result, not a numpy axis error
-        return empty_df(
-            spark0, "query_id long, neighbor_id long, cos double, rank int")
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:  # empty Arrow batch: nothing to score
-                continue
-            iv = np.array(list(pdf[item_vec]), dtype=np.float64)
-            iv /= np.linalg.norm(iv, axis=1, keepdims=True)
-            sims = iv @ mat.T  # (batch, n_queries)
-            out = pd.DataFrame({
-                "query_id": np.repeat(ids, len(pdf)),
-                "neighbor_id": np.tile(pdf[item_id].values, len(ids)),
-                "cos": sims.T.ravel(),
-            })
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = items.select(item_id, item_vec).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double")
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+# Score-matrix size the exact kernel holds at once (query block x batch
+# items), in doubles: 256k entries = 2 MB, so each dim of the fold runs
+# over cache-resident rows whatever the batch size. The kernel's helpers
+# are nested in it: Python workers then need only numpy and pyarrow, not
+# this package, on their path.
+_KBEST_BLOCK = 1 << 18
 
 
 def cosine_topk_exact_arrow(
@@ -336,34 +268,67 @@ def cosine_topk_exact_arrow(
     query_vec: str = "embedding", item_vec: str = "embedding",
     k: int = 5, max_queries: int = 10_000,
 ) -> DataFrame:
-    """Bit-identical Arrow twin of :func:`cosine_topk` — same rows,
-    same ``cos`` doubles, ~20x less compute time.
+    """Exact top-k by cosine per query vector, bit-identical to
+    :func:`cosine_topk`: same rows, same ``cos`` doubles. Output:
+    (query_id, neighbor_id, cos, rank).
 
-    ``cosine_topk`` evaluates the dot/norm folds as interpreted
-    higher-order functions: measured ~100 ns per element-multiply at
-    sf0.1 (200 probes x 2000 items x 64 dims = 2.4 s). This kernel
-    reproduces the EXACT floating-point operation sequence of those
-    folds, just vectorized across rows instead of across dims:
+    ``cosine_topk`` evaluates its dot/norm folds as interpreted
+    higher-order functions, ~100 ns per element-multiply. This kernel
+    performs the same IEEE operation sequence inside one
+    ``mapInArrow`` over the items, vectorized across rows instead of
+    across dims:
 
-    - norms: ``acc = (((0.0 + x0*x0) + x1*x1) + ...)`` then sqrt —
-      the kernel accumulates dim-sequentially over numpy element-wise
-      ops (one IEEE mul + one IEEE add rounding per dim per row, no
-      FMA, no pairwise regrouping), which performs the identical
-      rounding chain per element;
-    - dot: same dim-sequential fold of ``q_d * i_d``;
+    - norms: ``acc = (((0.0 + x0*x0) + x1*x1) + ...)`` then sqrt, one
+      numpy mul and one add per dim (no FMA, no pairwise regrouping);
+    - dot: the same dim-sequential fold of ``q_d * i_d``;
     - ``cos = dot / (qn * in)`` in the same association.
 
-    Vectorizing across ROWS changes which element is computed when,
-    never how any single element rounds — so the emitted doubles are
-    equal, the (cos DESC, neighbor_id ASC) order is equal, and the
-    top-k SET is equal. (Contrast ``cosine_topk_arrow``, which
-    normalizes then matmuls — BLAS pairwise summation, last-ulp
-    divergence, rows-only verification.)
+    Every element rounds as it does in the fold, so the doubles, the
+    window order and the top-k set are equal. Bad input matches too:
+    a null vector, a null element or a length mismatch gives a null
+    ``cos`` (ranked last); a zero divisor raises DIVIDE_BY_ZERO under
+    ANSI mode and gives a null ``cos`` without it.
 
-    The query side is collected and broadcast (bounded probe sets
-    only, same contract as ``cosine_topk_arrow``)."""
+    Bounded per task: each Arrow batch emits only every query's k best
+    items (``kbest``), at most Q·k rows, and the ``row_number``
+    window merges these partial top-ks — exact, because the top-k of
+    a union is the top-k of the per-batch top-ks. The query side is
+    collected and broadcast: bounded probe sets only, guarded by
+    ``max_queries``."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    def fold_norms(cols):
+        """``l2norm``'s fold per row, from dim-major columns:
+        sqrt(((0.0 + x0*x0) + x1*x1) + ...), one IEEE mul and add per
+        dim."""
+        acc = np.zeros(cols.shape[1])
+        for x in cols:
+            acc = acc + x * x
+        return np.sqrt(acc)
+
+    def kbest(qids, nids, cos, null, excl):
+        """Each row's ``k`` best columns under the final window's order:
+        ``cos`` DESC with NaN largest and NULLs last, then ``neighbor_id``
+        ASC. ``excl`` columns (self-matches, null ids) never count.
+        Returns flat (query_id, neighbor_id, cos, null) arrays."""
+        isnan = np.isnan(cos) & ~null
+        # one float key, monotone in the window order (NaN and +inf, NULL
+        # and -inf share a key): everything at or below its k-th smallest
+        # value holds the exact top-k, which the lexsort then orders exactly
+        key = np.where(isnan, -np.inf, -cos)
+        key[null | excl] = np.inf
+        cand = ~excl
+        if k < key.shape[1]:
+            cand &= key <= np.partition(key, k - 1, axis=1)[:, k - 1:k]
+        r, c = np.nonzero(cand)
+        cls = np.where(isnan[r, c], 0, np.where(null[r, c], 2, 1))
+        val = np.where(cls == 1, -cos[r, c], 0.0)
+        order = np.lexsort((nids[c], val, cls, r))
+        r, c = r[order], c[order]
+        top = np.arange(len(r)) - np.searchsorted(r, r) < k
+        r, c = r[top], c[top]
+        return qids[r], nids[c], cos[r, c], null[r, c]
 
     q_rows = (queries.select(F.col(query_id).alias("__qid"),
                              as_double(F.col(query_vec)).alias("__qv"))
@@ -373,54 +338,85 @@ def cosine_topk_exact_arrow(
             f"cosine_topk_exact_arrow collects the query set; got more "
             f"than max_queries={max_queries} rows — bounded probe sets "
             f"only.")
-    spark0 = queries.sparkSession
+    spark = queries.sparkSession
+    # a null id never passes cosine_topk's query_id != neighbor_id
+    q_rows = [r for r in q_rows if r["__qid"] is not None]
     if not q_rows:
         return empty_df(
-            spark0, "query_id long, neighbor_id long, cos double, rank int")
-    q_ids = [r["__qid"] for r in q_rows]
-    q_mat = np.array([r["__qv"] for r in q_rows], dtype=np.float64)
-    # query norms: plain-Python floats ARE IEEE doubles; this is the
-    # same ((0.0 + x*x) + ...) chain l2norm folds
-    import math
-    q_norm = []
-    for v in q_mat:
-        acc = 0.0
-        for x in v:
-            acc = acc + float(x) * float(x)
-        q_norm.append(math.sqrt(acc))
-    bc = spark0.sparkContext.broadcast(
-        (q_ids, q_mat, np.array(q_norm, dtype=np.float64)))
+            spark, "query_id long, neighbor_id long, cos double, rank int")
+    # queries grouped by dims; a null vector or element nulls the norm
+    # and so every cos of that query: dims -1 matches no item
+    by_dims: dict = {}
+    for qid, v in q_rows:
+        dims = -1 if v is None or None in v else len(v)
+        by_dims.setdefault(dims, []).append((qid, v if dims >= 0 else []))
+    groups = []
+    for dims, rows in by_dims.items():
+        qmat = np.array([v for _, v in rows],
+                        dtype=np.float64).reshape(len(rows), max(dims, 0))
+        groups.append((dims, np.array([qid for qid, _ in rows], np.int64),
+                       qmat, fold_norms(qmat.T)))
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
+    bc = spark.sparkContext.broadcast(groups)
+    out_schema = pa.schema([("query_id", pa.int64()),
+                            ("neighbor_id", pa.int64()),
+                            ("cos", pa.float64())])
 
     def score(batches):
-        ids, qmat, qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            iv = np.array(list(pdf[item_vec]), dtype=np.float64)
-            # item norms, dim-sequential (see docstring)
-            acc = np.zeros(len(iv))
-            for d in range(iv.shape[1]):
-                x = iv[:, d]
-                acc = acc + x * x
-            inorm = np.sqrt(acc)
-            nid = pdf[item_id].values
-            out = []
-            for qi, qid in enumerate(ids):
-                q = qmat[qi]
-                dotv = np.zeros(len(iv))
-                for d in range(iv.shape[1]):
-                    dotv = dotv + q[d] * iv[:, d]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    "neighbor_id": nid,
-                    "cos": dotv / (qn[qi] * inorm)}))
-            yield pd.concat(out, ignore_index=True)
+            ids, vecs = batch.column(0), batch.column(1)
+            nids = ids.fill_null(0).to_numpy()
+            offs = vecs.offsets.to_numpy()
+            lens = np.diff(offs)
+            el_null = np.concatenate(([0], np.cumsum(
+                vecs.values.is_null().to_numpy(zero_copy_only=False))))
+            ok = (vecs.is_valid().to_numpy(zero_copy_only=False)
+                  & (el_null[offs[1:]] == el_null[offs[:-1]]))
+            vals = vecs.values.to_numpy(zero_copy_only=False) \
+                .astype(np.float64)
+            bad_id = ~ids.is_valid().to_numpy(zero_copy_only=False)
+            parts = []
+            for dims, qids, qmat, qnorm in bc.value:
+                sel = np.nonzero(ok & (lens == dims))[0]
+                if len(sel):
+                    cols = vals[offs[sel] + np.arange(dims)[:, None]]
+                    inorm = fold_norms(cols)
+                step = max(1, _KBEST_BLOCK // n)
+                for lo in range(0, len(qids), step):
+                    qb = qids[lo:lo + step]
+                    cos = np.full((len(qb), n), np.nan)
+                    null = np.ones((len(qb), n), dtype=bool)
+                    excl = (qb[:, None] == nids) | bad_id
+                    if len(sel):
+                        with np.errstate(all="ignore"):
+                            dot = np.zeros((len(qb), len(sel)))
+                            for d in range(dims):
+                                dot = dot + qmat[lo:lo + step, d, None] * cols[d]
+                            div = qnorm[lo:lo + step, None] * inorm
+                            cos[:, sel] = dot / div
+                        zero = div == 0
+                        hit = np.argwhere(zero & ~excl[:, sel])
+                        if ansi and len(hit):
+                            qi, ii = hit[0]
+                            raise ArithmeticError(
+                                f"[DIVIDE_BY_ZERO] Division by zero: zero "
+                                f"cosine divisor for query_id={qb[qi]}, "
+                                f"neighbor_id={nids[sel[ii]]}; set "
+                                f"spark.sql.ansi.enabled=false for NULL")
+                        null[:, sel] = zero
+                    parts.append(kbest(qb, nids, cos, null, excl))
+            q_out, n_out, c_out, null_out = (np.concatenate(p)
+                                             for p in zip(*parts))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_out, pa.int64()), pa.array(n_out, pa.int64()),
+                 pa.array(c_out, pa.float64(), mask=null_out)],
+                schema=out_schema)
 
-    scored = (items.select(item_id, item_vec)
-              .mapInPandas(score,
-                           schema="query_id long, neighbor_id long, "
-                                  "cos double")
-              .filter(F.col("query_id") != F.col("neighbor_id")))
+    scored = items.select(item_id, item_vec).mapInArrow(
+        score, "query_id long, neighbor_id long, cos double")
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(),
                                           F.col("neighbor_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -537,7 +533,7 @@ def ivf_topk(
     Output: (query_id, neighbor_id, cos, rank) per probed pair.
 
     ``max_queries`` bounds the PROBE side to the lowest-id vectors
-    (same convention as ``pq_topk``/``cosine_topk_arrow``); the index
+    (same convention as ``pq_topk``); the index
     side stays the full corpus. The distinction matters for scaling:
     per-QUERY cost is ~nprobe x N/C (sub-linear in N with C ~
     sqrt(N) — the serving-path claim), but querying the WHOLE corpus
@@ -644,7 +640,7 @@ def pq_topk(
       one shuffle, map-side combinable.
 
     ``max_queries`` bounds the probe set (lowest ids, like
-    cosine_topk_arrow): the scan side stays the full corpus. Output:
+    ivf_topk): the scan side stays the full corpus. Output:
     (query_id, neighbor_id, adc, rank) — ``adc`` approximates the
     cosine of unit-normalized vectors; a unit test pins recall@k
     against exact cosine_topk.
@@ -880,7 +876,7 @@ def _nearest_centroid_udf(cents: list):
     array allocation each — 89M allocations at 200k x 447, ~27 s
     however the top-1 is taken, window or max_by). The BLAS form is
     one ``X @ C.T`` matmul per Arrow batch with NO N x C rows ever
-    existing JVM-side (~2 s; same reasoning as ``cosine_topk_arrow``).
+    existing JVM-side (~2 s).
     Centroids ride the closure (k x d doubles, ~230 KB at 447 x 64)."""
     import numpy as np
     import pandas as pd

@@ -919,18 +919,18 @@ def _knn_oracle() -> str:
                "label-propagation / weak-supervision pass for "
                "auto-labeling an unlabeled corpus slice from a "
                "labeled seed set",
-    doc=f"exact cosine top-{_KNN_K} per query (broadcast query side) "
-        "-> neighbor-label votes -> majority with (votes desc, label "
-        "asc) tie-break; integer votes keep the verdict hash-stable",
+    doc=f"exact cosine top-{_KNN_K} per query (the Arrow k-best "
+        "kernel) -> neighbor-label votes -> majority with (votes desc, "
+        "label asc) tie-break; integer votes keep the verdict hash-stable",
 )
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scoring pass reuses cosine_topk's shape: broadcast the
-    bounded query side, scan the item partitions once, per-query
-    top-k via partial window trim — no all-pairs shuffle. The vote
-    agg is O(queries x k) rows. At 100 TB the same plan swaps the
-    exact scan for the IVF/PQ candidate generator; the vote/verdict
-    stages are unchanged (they only see (query, neighbor_label)
-    pairs)."""
+    """The scoring pass is the exact top-k kernel: the query slice is
+    collected once, each item batch keeps every query's k best, and a
+    window merges those partial top-ks — no all-pairs rows leave a
+    task. The vote agg is O(queries x k) rows. At 100 TB the same plan
+    swaps the exact scan for the IVF/PQ candidate generator; the
+    vote/verdict stages are unchanged (they only see (query,
+    neighbor_label) pairs)."""
     from pyspark.sql import Window as W
 
     from .operators import similarity
@@ -938,9 +938,9 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_tables(spark, sf_dir, ("embeddings",))["embeddings"],
                 spark)
     q = e.filter(F.col("vec_id") % _KNN_MOD == 0)
-    # bit-identical Arrow twin of cosine_topk; the collected query side
-    # has the same driver ceiling the former broadcast had (N/40 rows
-    # of 64 doubles — 25 MB at sf100), raised max_queries documents it
+    # bit-identical to cosine_topk; the query slice is N/40 rows of
+    # 64 doubles collected to the driver, and the raised max_queries
+    # states that ceiling
     topk = similarity.cosine_topk_exact_arrow(q, e, k=_KNN_K,
                                               max_queries=1_000_000)
     labels = e.select(F.col("vec_id").alias("neighbor_id"),

@@ -459,9 +459,7 @@ _COS_SQL = ("list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2])) "
             "/ (sqrt(list_sum(list_transform({a}, x -> x*x))) "
             "* sqrt(list_sum(list_transform({b}, x -> x*x))))")
 
-@register(
-    "q_ann_topk",
-    oracle=f"""
+_ANN_TOPK_ORACLE = f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
       FROM embeddings
@@ -476,7 +474,12 @@ _COS_SQL = ("list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2])) "
                                    ORDER BY cos DESC, neighbor_id) AS rank
       FROM scored
     ) WHERE rank <= 5
-    """,
+    """
+
+
+@register(
+    "q_ann_topk",
+    oracle=_ANN_TOPK_ORACLE,
     survey_ref="training-data similarity search: brute-force cosine top-k",
     doc="exact kNN baseline: broadcast queries, scan items once",
 )
@@ -620,18 +623,14 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ann_topk_arrow",
-    oracle=None,  # numpy matmul sum order differs in the last ulp ->
-                  # rows-only check; recall vs the exact path is
-                  # asserted in tests
-    survey_ref="training-data similarity: Arrow/BLAS brute-force top-k (scale path)",
-    doc="mapInPandas + numpy matmul kNN; rank-compatible with q_ann_topk",
-    rotate=False,  # evidence: q_ann_arrow_recall (hash-gated)
+    oracle=_ANN_TOPK_ORACLE,
+    survey_ref="training-data similarity: Arrow brute-force top-k (the "
+               "exact kernel q_ann_topk runs)",
+    doc="q_ann_topk under its Arrow-kernel name: mapInArrow exact "
+        "cosine top-k, bit-identical to the expression fold",
 )
 def q_ann_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_arrow(q, e, k=5) \
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return q_ann_topk(spark, sf_dir)
 
 
 @register(
@@ -1658,16 +1657,15 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=lambda sf: _recall_oracle("q_ann_arrow_recall", 5,
                                      _EMB_CTE, sf),
     survey_ref="training-data similarity: hash-gated recall oracle for the "
-               "Arrow/BLAS brute-force path (upgrades q_ann_topk_arrow's "
-               "rows-only driver check)",
-    doc="cosine_topk_arrow -> parquet handoff -> integer recall-ppm vs "
-        "exact top-k (1e6 everywhere unless a last-ulp rank flip occurs, "
-        "in which case both engines see the same dip)",
+               "Arrow exact-kernel brute-force path",
+    doc="cosine_topk_exact_arrow -> parquet handoff -> integer recall-ppm "
+        "vs exact top-k: 1e6 for every probe, which DuckDB confirms from "
+        "its own cosine top-k",
 )
 def q_ann_arrow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     q = e.filter(F.col("vec_id") < 10)
-    approx = similarity.cosine_topk_arrow(q, e, k=5)
+    approx = similarity.cosine_topk_exact_arrow(q, e, k=5)
     return _recall_vs_exact(spark, approx, e, "q_ann_arrow_recall",
                             sf_dir, k=5)
 
@@ -1701,7 +1699,7 @@ def q_multimodal_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.read.parquet(feats_aux) \
         .withColumnRenamed("doc_id", "vec_id")
     q = feats.filter(F.col("vec_id") < 5)
-    approx = similarity.cosine_topk(q, feats, k=5)
+    approx = similarity.cosine_topk_exact_arrow(q, feats, k=5)
     return _recall_vs_exact(spark, approx, feats, "q_multimodal_recall",
                             sf_dir, k=5)
 

@@ -958,7 +958,3 @@ class _TxnContext:
         self.store._commit(self.txn)
         return False
 
-
-# Back-compat name: earlier rounds used a versioned-directory-swap
-# store under this name; the API (read/overwrite/append) is unchanged.
-ParquetStateStore = TxnStateStore

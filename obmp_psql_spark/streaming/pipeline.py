@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import ingest, ingest_ls
 from ..schemas import MESSAGE_SCHEMAS
-from ..state import ParquetStateStore
+from ..state import TxnStateStore
 # staging-write concurrency lives with the txn store (shared by the
 # wire-ingest and incremental-index operators); old private name kept
 # for this module's call sites
@@ -50,7 +50,7 @@ class BmpStreamingIngest:
 
     RIB_KEY = ["peer_hash_id", "hash_id"]
 
-    def __init__(self, spark: SparkSession, store: ParquetStateStore,
+    def __init__(self, spark: SparkSession, store: TxnStateStore,
                  geo_ip: DataFrame | None = None,
                  rib_buckets: int | None = None,
                  family_buckets: int | None = None):

@@ -2,8 +2,8 @@
 ingest merge must return an empty result — never crash — on empty
 inputs. At scale, empty inputs are routine (empty micro-batches after
 a filter, empty partitions, a source with no new data); round 6 found
-two driver-side crashes here (pq_topk's dims head() and
-cosine_topk_arrow's numpy normalization on a 0-row probe set)."""
+two driver-side crashes here (pq_topk's dims head() and a numpy
+normalization on a 0-row probe set)."""
 
 from __future__ import annotations
 
@@ -36,7 +36,7 @@ def _pairs(spark):
                                     threshold=0.1),
     lambda s: D.connected_components(_pairs(s)),
     lambda s: S.cosine_topk(_vecs(s), _vecs(s)),
-    lambda s: S.cosine_topk_arrow(_vecs(s), _vecs(s), k=3),
+    lambda s: S.cosine_topk_exact_arrow(_vecs(s), _vecs(s), k=3),
     lambda s: S.lsh_topk(_vecs(s), dims=4, n_planes=2),
     lambda s: S.lsh_topk(_vecs(s), dims=4, n_planes=2,
                          max_bucket_size="auto"),
@@ -66,11 +66,11 @@ def test_operator_empty_input_returns_empty(spark, build):
 
 def test_arrow_topk_empty_items_side(spark):
     """Probe set non-empty but item side empty: per-batch guard must
-    skip empty Arrow batches instead of feeding numpy a 0-row frame."""
+    skip empty Arrow batches instead of feeding numpy a 0-row batch."""
     q = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id long, embedding array<float>")
-    out = S.cosine_topk_arrow(q, _vecs(spark), k=3)
+    out = S.cosine_topk_exact_arrow(q, _vecs(spark), k=3)
     assert out.count() == 0
 
 

@@ -8,13 +8,13 @@ import datetime as dt
 from obmp_psql_spark.ingest import apply_unicast_prefix
 from obmp_psql_spark.jobs import JobRunner
 from obmp_psql_spark.sources.jdbc import upsert_statement
-from obmp_psql_spark.state import ParquetStateStore
+from obmp_psql_spark.state import TxnStateStore
 
 from .test_bmp_ingest import empty, msgs, ts, upx
 
 
 def _seed_store(spark, root):
-    store = ParquetStateStore(spark, str(root))
+    store = TxnStateStore(spark, str(root))
     rib, log0 = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", f"p{i % 2}", f"a{i}", ts(0, i)) for i in range(20)]))
@@ -137,7 +137,7 @@ def test_global_rib_auto_sink_shape_census(spark, tmp_path):
     the r12 crossover extrapolation; see JobRunner class comment),
     and the churn-locality census is recorded in commit metadata.
     full_sync=True stays the explicit semantic resync."""
-    store = ParquetStateStore(spark, str(tmp_path / "auto"))
+    store = TxnStateStore(spark, str(tmp_path / "auto"))
     rib, _ = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", f"p{i % 2}", f"a{i}", ts(0, i),
@@ -189,7 +189,7 @@ def test_global_rib_auto_sink_shape_census(spark, tmp_path):
     assert store.bucket_spec("global_ip_rib") == \
         (["prefix", "recv_origin_as"], 8)
     # ...and a fresh table gets the suggest_buckets law (floor here)
-    s2 = ParquetStateStore(spark, str(tmp_path / "auto2"))
+    s2 = TxnStateStore(spark, str(tmp_path / "auto2"))
     s2.overwrite("ip_rib", store.read("ip_rib"))
     s2.overwrite("info_route", empty(spark, "info_route"))
     s2.overwrite("rpki_validator", empty(spark, "rpki_validator"))
@@ -250,7 +250,7 @@ def test_retention_drops_whole_expired_chunks(spark, tmp_path):
     the Timescale drop_chunks semantics (1_base.sql:369)."""
     import pyspark.sql.functions as F
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     rib, log0 = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", "p0", f"a{i}", ts(0, i)) for i in range(4)]))
@@ -290,7 +290,7 @@ def test_retention_drops_whole_expired_chunks(spark, tmp_path):
 
 
 def test_compaction_preserves_bucketed_layout(spark, tmp_path):
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     rows = spark.createDataFrame(
         [(f"k{i}", f"p{i % 2}", i) for i in range(20)],
         "hash_id string, peer_hash_id string, v long")
@@ -320,7 +320,7 @@ def test_compaction_preserves_bucketed_layout(spark, tmp_path):
 def test_run_vacuum_reclaims_orphans_and_folds_log(spark, tmp_path):
     from obmp_psql_spark.state import Transaction
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     for i in range(12):
         store.overwrite("t", spark.createDataFrame([(i,)], "v long"))
     # crash orphan: staged but never committed
@@ -405,7 +405,7 @@ def test_retention_default_policies_cover_all_log_tables(spark, tmp_path):
     10_l3vpn.sql)."""
     import pyspark.sql.functions as F
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     now = ts(0) + dt.timedelta(days=365)
     for table, ts_col, _window in JobRunner.RETENTION_POLICIES:
         # one append per micro-batch wave, as the streaming sink writes

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import ipaddress
 
+import pytest
 from pyspark.sql import functions as F
 
 from obmp_psql_spark.functions import net
@@ -195,18 +196,106 @@ def test_containment_join128_coarse_default_route(spark):
     assert "BroadcastHashJoin" in plan and "Union" not in plan
 
 
+def _topk_rows(df):
+    """Whole top-k rows, ``cos`` compared by its repr: bit for bit, NaN
+    and NULL included."""
+    return sorted((r.query_id, r.neighbor_id, r.rank, repr(r.cos))
+                  for r in df.collect())
+
+
 def test_arrow_ann_matches_exact_ranks(spark):
-    """The numpy path must produce the same neighbor sets/ranks as
-    the bit-exact expression path (float noise < rank gaps here)."""
+    """The exact kernel returns cosine_topk's rows, ``cos`` doubles
+    included, at the default Arrow batch size and at 3-row batches
+    (items span many batches and k exceeds a batch). Every item vector
+    appears twice under two ids, so scores tie and the k=4 cut splits
+    a tie; the queries are items too (self-matches)."""
     from obmp_psql_spark.operators import similarity
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    items = e.unionByName(e.withColumn("vec_id", F.col("vec_id") + 100_000))
     q = e.filter("vec_id < 10")
-    exact = {(r.query_id, r.rank): r.neighbor_id
-             for r in similarity.cosine_topk(q, e, k=5).collect()}
-    arrow = {(r.query_id, r.rank): r.neighbor_id
-             for r in similarity.cosine_topk_arrow(q, e, k=5).collect()}
-    assert exact == arrow
+    want = _topk_rows(similarity.cosine_topk(q, items, k=4))
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    try:
+        for rows in (None, 3):
+            if rows:
+                spark.conf.set(batch, str(rows))
+            got = _topk_rows(similarity.cosine_topk_exact_arrow(q, items, k=4))
+            assert got == want, rows
+    finally:
+        spark.conf.unset(batch)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("vec", [None, [1.0], [0.0, 0.0], [1.0, None],
+                                 [float("nan"), 1.0]],
+                         ids=["null", "ragged", "zero_norm", "null_element",
+                              "nan"])
+def test_exact_kernel_bad_vectors_match_reference(spark, vec, ansi):
+    """A bad vector gets cosine_topk's answer on the exact kernel, as an
+    item and as a query: null, ragged and null-element vectors give a
+    null ``cos`` ranked last, NaN ranks first, and a zero norm raises
+    DIVIDE_BY_ZERO under ANSI mode (a null ``cos`` without it)."""
+    from pyspark.errors import PySparkException
+
+    from obmp_psql_spark.operators import similarity
+
+    items = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, vec)],
+        "vec_id long, embedding array<float>")
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    got = []
+    try:
+        for topk in (similarity.cosine_topk,
+                     similarity.cosine_topk_exact_arrow):
+            try:
+                got.append(_topk_rows(topk(items, items, k=5)))
+            except PySparkException as exc:
+                assert "DIVIDE_BY_ZERO" in str(exc)
+                got.append("DIVIDE_BY_ZERO")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    ref, kernel = got
+    assert kernel == ref
+    if ref == "DIVIDE_BY_ZERO":
+        assert vec == [0.0, 0.0] and ansi == "true"
+        return
+    nan = vec is not None and vec[0] != vec[0]
+    assert [(r[2], r[3]) for r in ref if r[:2] == (1, 3)] == \
+        [(1, "nan") if nan else (2, "None")]
+
+
+def test_exact_kernel_emits_at_most_q_times_k_rows_per_batch(spark):
+    """Each Arrow batch yields only every query's k best: 200 items in
+    37-row batches (6 batches), 10 queries, k=3 -> the MapInArrow node
+    hands 6 x 10 x 3 = 180 rows to the window, not the 1,990 scored
+    pairs."""
+    from obmp_psql_spark.operators import similarity
+
+    confs = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.execution.arrow.maxRecordsPerBatch": "37"}
+    prior = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        items = spark.range(200).select(
+            F.col("id").alias("vec_id"),
+            F.array(F.sin("id"), F.cos("id")).alias("embedding")).coalesce(1)
+        out = similarity.cosine_topk_exact_arrow(
+            items.filter("vec_id < 10"), items, k=3)
+        assert len(out.collect()) == 30
+
+        def emitted(node):
+            if node.nodeName() == "MapInArrow":
+                return node.metrics().get("pythonNumRowsReceived").get().value()
+            kids = node.children()
+            return sum(emitted(kids.apply(i)) for i in range(kids.size()))
+
+        assert emitted(out._jdf.queryExecution().executedPlan()) == 180
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
 
 
 def test_ivf_recall_vs_exact(spark):

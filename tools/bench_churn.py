@@ -89,9 +89,9 @@ def build_state(spark, n: int, root: str):
     from pyspark.sql import functions as F
 
     from obmp_psql_spark.schemas import INFO_ROUTE, RPKI_VALIDATOR
-    from obmp_psql_spark.state import ParquetStateStore
+    from obmp_psql_spark.state import TxnStateStore
 
-    store = ParquetStateStore(spark, root)
+    store = TxnStateStore(spark, root)
     pfx_mod = n // 4
     store.overwrite("ip_rib",
                     synth_rib(spark, n, T0 - dt.timedelta(hours=1),

@@ -47,7 +47,7 @@ CHURN_SIZES = [250_000, 4_000_000, 20_000_000]  # 5%, 80%, total replay
 def main() -> None:
     from obmp_psql_spark.jobs import JobRunner
     from obmp_psql_spark.session import get_spark
-    from obmp_psql_spark.state import ParquetStateStore
+    from obmp_psql_spark.state import TxnStateStore
 
     spark = get_spark("bench-churn-auto")
     spark.range(10000).selectExpr("id % 7 k").groupBy("k").count() \
@@ -73,7 +73,7 @@ def main() -> None:
             root = tempfile.mkdtemp(prefix=f"chauto_{k}_{arm}_")
             shutil.rmtree(root)
             shutil.copytree(base, root)
-            s = ParquetStateStore(spark, root)
+            s = TxnStateStore(spark, root)
             j = JobRunner(s)
             t = time.perf_counter()
             if arm == "incremental":

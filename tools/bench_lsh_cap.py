@@ -69,7 +69,7 @@ def main() -> None:
         probes = e.filter(F.col("vec_id") < 50)
         t0 = time.time()
         truth = {(r.query_id, r.neighbor_id)
-                 for r in S.cosine_topk(probes, e, k=K).collect()}
+                 for r in S.cosine_topk_exact_arrow(probes, e, k=K).collect()}
         brute_wall = time.time() - t0
         row: dict = {"n_vec": n, "brute_wall_s": round(brute_wall, 2)}
         variants = [("uncapped", None)] if n < UNCAPPED_MAX_N else []
