@@ -5,7 +5,9 @@ state, log appends) out — replicating the reference's ON CONFLICT
 CASE matrices, BEFORE/AFTER triggers, and side-effect statements:
 
 - unicast_prefix: UnicastPrefixQuery.java:24-51 (conditional merge),
-  9_triggers.sql:89-126 (change log with old values on withdraw)
+  9_triggers.sql:89-126 (change log with old values on withdraw) —
+  ``IP_RIB_POLICY`` run by ``operators.merge.conditional_rib_merge``,
+  the merge ingest_ls uses for l3vpn_rib and the ls_* tables
 - base_attribute: BaseAttributeQuery.java:33 (ON CONFLICT DO NOTHING)
 - peer: PeerQuery.java:24-40 (merge SET list), :121-153 (RIB flush),
   9_triggers.sql:43-85 (LocRib backfill, geo enrich, event log)
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 from .functions import net
 from .operators.dedup import dedup_latest
 from .operators.lpm import lpm_join128
+from .operators.merge import MergePolicy, conditional_rib_merge
 
 
 def _nullif_empty(c: Column) -> Column:
@@ -48,56 +51,6 @@ def _split_strs(c: Column) -> Column:
     return F.when(
         F.length(F.trim(c)) > 0, F.split(F.trim(c), r"\s+")
     ).otherwise(F.array().cast("array<string>"))
-
-
-def split_merge_outputs(j: DataFrame, state_cols: list,
-                        changed, log_cols: list,
-                        materialize_join=None
-                        ) -> tuple[DataFrame, DataFrame]:
-    """Derive (new_state, log) from a merge join.
-
-    ``state_cols``/``log_cols`` are Column objects or SQL expression
-    strings (``"<expr> AS <name>"``); ``changed`` likewise. The
-    string form exists because per-column Column construction costs
-    ~8-10 py4j round-trips per column — a parsed selectExpr is one
-    call for the whole projection (driver plan-construction time,
-    guide §7.3).
-
-    Without ``materialize_join`` the two outputs are independent
-    plans over ``j`` — fine when only one is consumed, but a sink
-    that writes BOTH runs the join (and everything under it) twice.
-    With it (e.g. ``lambda df: df.localCheckpoint()``), the join is
-    executed ONCE into a combined (state-struct, nullable log-struct)
-    frame and both outputs become projections of that — the
-    single-pass multi-output shape a lakehouse MERGE..OUTPUT gets
-    natively. On a cluster sink, substitute a staging-dir write for
-    localCheckpoint; the cost model is the same (one join, one
-    materialization, two cheap scans)."""
-    as_strings = state_cols and isinstance(state_cols[0], str)
-    if materialize_join is None:
-        if as_strings:
-            return (j.selectExpr(*state_cols),
-                    j.filter(changed).selectExpr(*log_cols))
-        return j.select(*state_cols), j.filter(changed).select(*log_cols)
-    if as_strings:
-        # named_struct keeps the field names from the "... AS name"
-        # suffixes; CASE WHEN yields NULL unless `changed` is TRUE —
-        # same rows as filter(changed) under SQL three-valued logic
-        def _named(exprs):
-            return "named_struct(" + ", ".join(
-                f"'{e.rsplit(' AS ', 1)[1].strip('`')}', "
-                f"{e.rsplit(' AS ', 1)[0]}" for e in exprs) + ")"
-        combined = materialize_join(j.selectExpr(
-            f"{_named(state_cols)} AS __state",
-            f"CASE WHEN {changed} THEN {_named(log_cols)} END AS __log"))
-    else:
-        combined = materialize_join(j.select(
-            F.struct(*state_cols).alias("__state"),
-            # when() yields NULL unless `changed` is TRUE — same rows
-            # as filter(changed) under SQL three-valued logic
-            F.when(changed, F.struct(*log_cols)).alias("__log")))
-    return (combined.select("__state.*"),
-            combined.filter(F.col("__log").isNotNull()).select("__log.*"))
 
 
 def _addr_bounds(prefix: Column, prefix_len: Column, is_ipv4: Column
@@ -179,6 +132,7 @@ def _prep_unicast_cols(gw, extra_cols: tuple[str, ...]) -> list:
             F.col("is_ipv4"),
             F.col("origin_asn").alias("origin_as"),
             F.col("prefix"), F.col("prefix_len"), F.col("timestamp"),
+            F.col("timestamp").alias("first_added_timestamp"),
             withdrawn.alias("is_withdrawn"),
             F.col("path_id"), F.col("labels"),
             F.col("is_pre_policy"), F.col("is_adj_rib_in"),
@@ -191,7 +145,8 @@ def _prep_unicast_cols(gw, extra_cols: tuple[str, ...]) -> list:
 
 def prepare_unicast_prefix(batch: DataFrame,
                            extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Message rows -> ip_rib row shape, filtered and batch-compressed.
+    """Message rows -> ip_rib row shape, filtered and batch-compressed
+    (``first_added_timestamp`` = ``timestamp``, kept only on insert).
     ``extra_cols`` carries table-variant columns (l3vpn's rd /
     ext_community_list) through the SAME dedup window — one pass, no
     second window + rejoin."""
@@ -201,94 +156,31 @@ def prepare_unicast_prefix(batch: DataFrame,
                         [F.col("timestamp").desc()])
 
 
+# ip_rib's ON CONFLICT matrix (UnicastPrefixQuery.java:35-40): a
+# withdraw keeps the previous base_attr_hash_id/origin_as, every other
+# column but the insert-only first_added_timestamp takes the batch
+# value. Log (9_triggers.sql:121-126): withdraws log the OLD
+# attr/origin.
+IP_RIB_POLICY = MergePolicy(
+    keys=("hash_id", "peer_hash_id"),
+    always=("is_ipv4", "prefix", "prefix_len", "timestamp", "is_withdrawn",
+            "path_id", "labels", "is_pre_policy", "is_adj_rib_in",
+            "prefix_start", "prefix_end", "prefix_base_hi", "prefix_base_lo"),
+    keep_on_withdraw=("base_attr_hash_id", "origin_as"),
+    log_table="ip_rib_log",
+    log_old_on_withdraw=("base_attr_hash_id", "origin_as"),
+)
+
+
 def apply_unicast_prefix(state: DataFrame, batch: DataFrame,
-                         materialize=None,
                          prepared: bool = False,
                          materialize_join=None) -> tuple[DataFrame, DataFrame]:
-    """Returns (new ip_rib state, ip_rib_log appends).
-
-    Merge semantics (UnicastPrefixQuery.java:35-40): withdraw keeps
-    the previous base_attr_hash_id/origin_as; everything else takes
-    the batch value. first_added_timestamp is insert-only.
-
-    Log semantics (9_triggers.sql:121-126): AFTER UPDATE only (no
-    insert trigger), WHEN state flipped OR (advertise AND attr
-    changed, SQL null semantics); withdraw logs OLD attr/origin.
-
-    ``materialize`` (e.g. ``lambda df: df.localCheckpoint()``) caches
-    the prepared batch so the log and state outputs — two separate
-    write jobs in the sink — don't each re-run the parse+dedup
-    stage. Delta MERGE gets this for free (one job, two outputs).
-    ``prepared=True`` means ``batch`` is already the output of
-    ``prepare_unicast_prefix`` (the sink pre-materializes it once and
-    reuses it for bucket pruning too).
-    """
+    """Returns (new ip_rib state, ip_rib_log appends) under
+    ``IP_RIB_POLICY``. ``prepared=True`` means ``batch`` is already
+    the output of ``prepare_unicast_prefix`` (the sink materializes
+    it once and reuses it for bucket pruning too)."""
     src = batch if prepared else prepare_unicast_prefix(batch)
-    if materialize is not None:
-        src = materialize(src)
-    src = src.alias("src")
-    tgt = state.alias("tgt")
-    j = src.join(
-        tgt,
-        (F.col("src.peer_hash_id") == F.col("tgt.peer_hash_id"))
-        & (F.col("src.hash_id") == F.col("tgt.hash_id")),
-        "full_outer",
-    )
-    # string-SQL projections, parsed JVM-side in one selectExpr call —
-    # see split_merge_outputs on why (py4j construction cost)
-    has_src = "src.hash_id IS NOT NULL"
-    has_tgt = "tgt.hash_id IS NOT NULL"
-    matched = f"({has_src} AND {has_tgt})"
-
-    def pick(col: str) -> str:
-        return f"CASE WHEN {has_src} THEN src.`{col}` ELSE tgt.`{col}` END"
-
-    def keep_on_withdraw(col: str) -> str:
-        return (f"CASE WHEN {matched} AND src.is_withdrawn "
-                f"THEN tgt.`{col}` ELSE {pick(col)} END")
-
-    state_cols = [
-        f"{pick('hash_id')} AS hash_id",
-        f"{pick('peer_hash_id')} AS peer_hash_id",
-        f"{keep_on_withdraw('base_attr_hash_id')} AS base_attr_hash_id",
-        f"{pick('is_ipv4')} AS is_ipv4",
-        f"{keep_on_withdraw('origin_as')} AS origin_as",
-        f"{pick('prefix')} AS prefix",
-        f"{pick('prefix_len')} AS prefix_len",
-        f"{pick('timestamp')} AS timestamp",
-        f"CASE WHEN {has_tgt} THEN tgt.first_added_timestamp "
-        f"ELSE src.timestamp END AS first_added_timestamp",
-        f"{pick('is_withdrawn')} AS is_withdrawn",
-        f"{pick('path_id')} AS path_id",
-        f"{pick('labels')} AS labels",
-        f"{pick('is_pre_policy')} AS is_pre_policy",
-        f"{pick('is_adj_rib_in')} AS is_adj_rib_in",
-        f"{pick('prefix_start')} AS prefix_start",
-        f"{pick('prefix_end')} AS prefix_end",
-        f"{pick('prefix_base_hi')} AS prefix_base_hi",
-        f"{pick('prefix_base_lo')} AS prefix_base_lo",
-    ]
-
-    changed = (
-        f"{matched} AND (src.is_withdrawn != tgt.is_withdrawn "
-        # plain != replicates Postgres NULL semantics: NULL attr
-        # on either side -> condition NULL -> no log row
-        f"OR ((NOT src.is_withdrawn) AND "
-        f"src.base_attr_hash_id != tgt.base_attr_hash_id))"
-    )
-    log_cols = [
-        "src.is_withdrawn AS is_withdrawn",
-        "src.prefix AS prefix",
-        "src.prefix_len AS prefix_len",
-        "CASE WHEN src.is_withdrawn THEN tgt.base_attr_hash_id "
-        "ELSE src.base_attr_hash_id END AS base_attr_hash_id",
-        "src.peer_hash_id AS peer_hash_id",
-        "CASE WHEN src.is_withdrawn THEN tgt.origin_as "
-        "ELSE src.origin_as END AS origin_as",
-        "src.timestamp AS timestamp",
-    ]
-    return split_merge_outputs(j, state_cols, changed, log_cols,
-                               materialize_join)
+    return conditional_rib_merge(state, src, IP_RIB_POLICY, materialize_join)
 
 
 # ---------------------------------------------------------------------------
@@ -404,7 +296,7 @@ def apply_peer(
     j = src.join(tgt, F.col("src.hash_id") == F.col("tgt.hash_id"), "full_outer")
 
     # string-SQL projection, one selectExpr call — see
-    # split_merge_outputs on why (py4j construction cost)
+    # operators.merge.split_merge_outputs on why (py4j cost)
     has_src = "src.hash_id IS NOT NULL"
     has_tgt = "tgt.hash_id IS NOT NULL"
     cols = []
@@ -495,7 +387,7 @@ def apply_router(
     j = src.join(tgt, F.col("src.hash_id") == F.col("tgt.hash_id"), "full_outer")
 
     # string-SQL projection, one selectExpr call — see
-    # split_merge_outputs on why (py4j construction cost)
+    # operators.merge.split_merge_outputs on why (py4j cost)
     has_src = "src.hash_id IS NOT NULL"
     has_tgt = "tgt.hash_id IS NOT NULL"
     matched = f"({has_src} AND {has_tgt})"

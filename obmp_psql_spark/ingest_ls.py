@@ -1,102 +1,20 @@
 """LS (link-state) and L3VPN ingest pipelines.
 
-All four tables share one merge/CDC shape, parameterized by column
-policy (reference: LsNodeQuery.java:36-39, LsLinkQuery.java:43-60,
+Each table is a prepare function plus a ``MergePolicy`` for the one
+withdraw-aware merge, ``operators.merge.conditional_rib_merge``
+(reference: LsNodeQuery.java:36-39, LsLinkQuery.java:43-60,
 LsPrefixQuery.java:39-48, L3VpnPrefixQuery.java:36-42; triggers
-9_triggers.sql:128-247, 10_l3vpn.sql:127-151):
-
-- state merge: ``always`` columns take the batch value on update;
-  ``keep_on_withdraw`` columns keep the old value when the batch row
-  is a withdraw; all other columns never change on update.
-- change log: emitted only for updates where the withdraw flag
-  flipped or (advertise) the attr hash changed; ``old_on_withdraw``
-  log columns take the pre-merge value on withdraws; ``always_old``
-  take it on every log row (ls_nodes.asn quirk).
+9_triggers.sql:128-247, 10_l3vpn.sql:127-151).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ingest import _nullif_empty
+from .ingest import _nullif_empty, prepare_unicast_prefix
 from .operators.dedup import dedup_latest
-
-
-@dataclass
-class MergePolicy:
-    keys: tuple[str, ...]
-    always: tuple[str, ...]
-    keep_on_withdraw: tuple[str, ...]
-    # log column policies; None => no log for this table
-    log_old_on_withdraw: tuple[str, ...] = ()
-    log_always_old: tuple[str, ...] = ()
-    log_new: tuple[str, ...] = ()
-
-
-def conditional_rib_merge(
-    state: DataFrame, batch: DataFrame, policy: MergePolicy,
-    materialize=None, materialize_join=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Generic withdraw-aware merge + trigger-CDC log. ``batch`` must
-    already be in state-column shape and batch-compressed (one row
-    per key). ``materialize`` (e.g. localCheckpoint) caches the
-    prepared batch so the sink's two write jobs (log + state) don't
-    each re-run the parse+dedup stage."""
-    if materialize is not None:
-        batch = materialize(batch)
-    src = batch.alias("src")
-    tgt = state.alias("tgt")
-    cond = None
-    for k in policy.keys:
-        c = F.col(f"src.{k}") == F.col(f"tgt.{k}")
-        cond = c if cond is None else (cond & c)
-    j = src.join(tgt, cond, "full_outer")
-    # Projections are built as SQL strings and parsed JVM-side in ONE
-    # selectExpr call: the previous per-column when/otherwise Column
-    # chains cost ~8-10 py4j round-trips per column (~2 ms each on
-    # this host), which made plan CONSTRUCTION a multi-second driver
-    # stall per merge (guide §7.3 — driver-side work shows up as
-    # "nothing running"). Semantics unchanged: CASE WHEN mirrors
-    # F.when's null fall-through exactly.
-    k0 = policy.keys[0]
-    has_src = f"src.`{k0}` IS NOT NULL"
-    has_tgt = f"tgt.`{k0}` IS NOT NULL"
-    matched = f"({has_src} AND {has_tgt})"
-    wd = "src.is_withdrawn"
-
-    cols = []
-    for f_ in state.schema.fields:
-        c = f_.name
-        if c in policy.always or c in policy.keys:
-            e = f"CASE WHEN {has_src} THEN src.`{c}` ELSE tgt.`{c}` END"
-        elif c in policy.keep_on_withdraw:
-            e = (f"CASE WHEN {matched} AND {wd} THEN tgt.`{c}` "
-                 f"WHEN {has_src} THEN src.`{c}` ELSE tgt.`{c}` END")
-        else:  # never updated after insert (incl. first_added_timestamp)
-            e = f"CASE WHEN {has_tgt} THEN tgt.`{c}` ELSE src.`{c}` END"
-        cols.append(f"{e} AS `{c}`")
-
-    changed = (
-        f"{matched} AND (src.is_withdrawn != tgt.is_withdrawn "
-        f"OR ((NOT {wd}) AND "
-        f"src.base_attr_hash_id != tgt.base_attr_hash_id))"
-    )
-    log_cols = []
-    for f_ in state.schema.fields:
-        c = f_.name
-        if c in policy.log_always_old:
-            e = f"tgt.`{c}`"
-        elif c in policy.log_old_on_withdraw:
-            e = f"CASE WHEN {wd} THEN tgt.`{c}` ELSE src.`{c}` END"
-        else:
-            e = f"src.`{c}`"
-        log_cols.append(f"{e} AS `{c}`")
-    from .ingest import split_merge_outputs
-    return split_merge_outputs(j, cols, changed, log_cols,
-                               materialize_join)
+from .operators.merge import MergePolicy, conditional_rib_merge
 
 
 # ---------------------------------------------------------------------------
@@ -107,6 +25,7 @@ LS_NODE_POLICY = MergePolicy(
     keys=("hash_id", "peer_hash_id"),
     always=("timestamp", "seq", "is_withdrawn"),
     keep_on_withdraw=("base_attr_hash_id", "sr_capabilities"),
+    log_table="ls_nodes_log",
     log_old_on_withdraw=("base_attr_hash_id", "bgp_ls_id", "igp_router_id",
                          "ospf_area_id", "protocol", "router_id",
                          "isis_area_id", "flags", "name", "mt_ids",
@@ -131,10 +50,8 @@ def prepare_ls_node(batch: DataFrame) -> DataFrame:
 
 
 def apply_ls_node(state: DataFrame, batch: DataFrame,
-                  materialize=None,
                   materialize_join=None) -> tuple[DataFrame, DataFrame]:
-    return conditional_rib_merge(state, prepare_ls_node(batch),
-                                 LS_NODE_POLICY, materialize,
+    return conditional_rib_merge(state, prepare_ls_node(batch), LS_NODE_POLICY,
                                  materialize_join)
 
 
@@ -152,6 +69,7 @@ LS_LINK_POLICY = MergePolicy(
         "mpls_proto_mask", "igp_metric", "srlg", "name",
         "epe_peer_node_sid", "adjacency_segment_id",
     ),
+    log_table="ls_links_log",
     log_old_on_withdraw=(
         "base_attr_hash_id", "mt_id", "interface_addr", "neighbor_addr",
         "is_ipv4", "protocol", "local_link_id", "remote_link_id",
@@ -192,10 +110,8 @@ def prepare_ls_link(batch: DataFrame) -> DataFrame:
 
 
 def apply_ls_link(state: DataFrame, batch: DataFrame,
-                  materialize=None,
                   materialize_join=None) -> tuple[DataFrame, DataFrame]:
-    return conditional_rib_merge(state, prepare_ls_link(batch),
-                                 LS_LINK_POLICY, materialize,
+    return conditional_rib_merge(state, prepare_ls_link(batch), LS_LINK_POLICY,
                                  materialize_join)
 
 
@@ -208,6 +124,7 @@ LS_PREFIX_POLICY = MergePolicy(
     always=("timestamp", "seq", "is_withdrawn"),
     keep_on_withdraw=("base_attr_hash_id", "igp_flags", "route_tag",
                       "ext_route_tag", "metric", "sid_tlv"),
+    log_table="ls_prefixes_log",
     log_old_on_withdraw=("base_attr_hash_id", "local_node_hash_id", "mt_id",
                          "protocol", "prefix", "prefix_len",
                          "ospf_route_type", "igp_flags", "route_tag",
@@ -234,10 +151,8 @@ def prepare_ls_prefix(batch: DataFrame) -> DataFrame:
 
 
 def apply_ls_prefix(state: DataFrame, batch: DataFrame,
-                    materialize=None,
                     materialize_join=None) -> tuple[DataFrame, DataFrame]:
-    return conditional_rib_merge(state, prepare_ls_prefix(batch),
-                                 LS_PREFIX_POLICY, materialize,
+    return conditional_rib_merge(state, prepare_ls_prefix(batch), LS_PREFIX_POLICY,
                                  materialize_join)
 
 
@@ -250,31 +165,22 @@ L3VPN_POLICY = MergePolicy(
     always=("timestamp", "is_withdrawn", "path_id", "labels",
             "is_pre_policy", "is_adj_rib_in", "rd", "ext_community_list"),
     keep_on_withdraw=("base_attr_hash_id", "origin_as"),
+    log_table="l3vpn_rib_log",
     log_old_on_withdraw=("base_attr_hash_id", "origin_as", "rd",
                          "ext_community_list"),
 )
 
 
 def prepare_l3vpn(batch: DataFrame) -> DataFrame:
-    from .ingest import prepare_unicast_prefix
-
     # rd/ext ride the SAME dedup window as the base shape — one pass,
     # no second window + rejoin (L3VpnPrefixQuery.java:36-42)
-    return prepare_unicast_prefix(
-        batch, extra_cols=("rd", "ext_community_list")
-    ).withColumn("first_added_timestamp", F.col("timestamp"))
+    return prepare_unicast_prefix(batch, extra_cols=("rd", "ext_community_list"))
 
 
 def apply_l3vpn(state: DataFrame, batch: DataFrame,
-                materialize=None,
                 materialize_join=None) -> tuple[DataFrame, DataFrame]:
     """L3VPN merge keeps the ip_rib CASE matrix plus rd/ext-community
     always-update (L3VpnPrefixQuery.java:36-42); log carries old
     rd/ext on withdraw (10_l3vpn.sql:127-151)."""
-    new_state, log = conditional_rib_merge(state, prepare_l3vpn(batch),
-                                           L3VPN_POLICY, materialize,
-                                           materialize_join)
-    log_cols = ["is_withdrawn", "prefix", "prefix_len", "base_attr_hash_id",
-                "peer_hash_id", "origin_as", "timestamp", "rd",
-                "ext_community_list"]
-    return new_state, log.select(*log_cols)
+    return conditional_rib_merge(state, prepare_l3vpn(batch), L3VPN_POLICY,
+                                 materialize_join)

@@ -44,7 +44,7 @@ def _messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = fan_out(load_tables(spark, sf_dir, ("events",))["events"], spark)
     # string-SQL projection, one selectExpr call — identical
     # expressions to the previous Column chains, parsed JVM-side
-    # (py4j construction cost, see ingest.split_merge_outputs)
+    # (py4j construction cost, see operators.merge.split_merge_outputs)
     return ev.selectExpr(
         "CASE WHEN value < 5 THEN 'del' ELSE 'add' END AS action",
         "concat('h', CAST(user_id AS STRING), '-', "

@@ -292,7 +292,7 @@ L3VPN_RIB = T.StructType(
 
 L3VPN_RIB_LOG = T.StructType(
     IP_RIB_LOG.fields
-    + [T.StructField("rd", STR)]
+    + [T.StructField("rd", STR), T.StructField("ext_community_list", STR)]
 )
 
 LS_NODES_LOG = LS_NODES

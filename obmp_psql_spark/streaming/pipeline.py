@@ -26,14 +26,48 @@ matches the reference's cross-thread behavior.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import ingest, ingest_ls
+from ..operators.merge import conditional_rib_merge
 from ..schemas import MESSAGE_SCHEMAS
-from ..state import TxnStateStore
-# staging-write concurrency lives with the txn store (shared by the
-# wire-ingest and incremental-index operators); old private name kept
-# for this module's call sites
+from ..state import TxnStateStore, bucket_of
+# module-level name so bmpbench/trace.py can patch it to time the
+# concurrent log + state staging
 from ..state import stage_concurrently as _stage_concurrently
+
+
+def _policy_merge(policy):
+    return lambda state, src, materialize_join: conditional_rib_merge(
+        state, src, policy, materialize_join)
+
+
+# Bucket key order is part of each table's on-disk layout: Murmur3
+# depends on column order, and stores record it as ``key_cols``.
+_IP_RIB_KEY = ["peer_hash_id", "hash_id"]
+_LS_L3VPN_KEY = ["hash_id", "peer_hash_id"]
+
+# msg_type -> (state table, log table, bucket key, prepare, merge).
+# ip_rib's prepare and merge are looked up on ``ingest`` at call time,
+# so a wrapper patched there (bmpbench/trace.py) sees every batch.
+_RIB_TABLES = {
+    "unicast_prefix": (
+        "ip_rib", "ip_rib_log", _IP_RIB_KEY,
+        lambda batch: ingest.prepare_unicast_prefix(batch),
+        lambda state, src, materialize_join: ingest.apply_unicast_prefix(
+            state, src, prepared=True, materialize_join=materialize_join)),
+    "ls_node": ("ls_nodes", "ls_nodes_log", _LS_L3VPN_KEY,
+                ingest_ls.prepare_ls_node,
+                _policy_merge(ingest_ls.LS_NODE_POLICY)),
+    "ls_link": ("ls_links", "ls_links_log", _LS_L3VPN_KEY,
+                ingest_ls.prepare_ls_link,
+                _policy_merge(ingest_ls.LS_LINK_POLICY)),
+    "ls_prefix": ("ls_prefixes", "ls_prefixes_log", _LS_L3VPN_KEY,
+                  ingest_ls.prepare_ls_prefix,
+                  _policy_merge(ingest_ls.LS_PREFIX_POLICY)),
+    "l3vpn": ("l3vpn_rib", "l3vpn_rib_log", _LS_L3VPN_KEY,
+              ingest_ls.prepare_l3vpn, _policy_merge(ingest_ls.L3VPN_POLICY)),
+}
 
 
 class BmpStreamingIngest:
@@ -48,73 +82,67 @@ class BmpStreamingIngest:
     the replayed batch re-applies cleanly; a replay after the commit
     is skipped by the txn action (T5/T8 exactly-once)."""
 
-    RIB_KEY = ["peer_hash_id", "hash_id"]
-
     def __init__(self, spark: SparkSession, store: TxnStateStore,
                  geo_ip: DataFrame | None = None,
-                 rib_buckets: int | None = None,
-                 family_buckets: int | None = None):
-        """``rib_buckets``: hash-bucket the ip_rib state on its merge
-        key so each micro-batch rewrites ONLY the buckets its keys
-        touch (lakehouse matched-file rewrite, O(batch) not O(table)
-        — at 100 TB this is the difference between a merge that works
-        and one that rewrites the world). None = monolithic replace.
-        ``family_buckets``: same for the LS/L3VPN state tables
-        (l3vpn_rib is the other table that reaches RIB scale)."""
+                 rib_buckets: int | None = None):
+        """``rib_buckets``: hash-bucket the five RIB-shaped state tables
+        (ip_rib, l3vpn_rib, ls_nodes, ls_links, ls_prefixes) on their
+        merge key so each micro-batch rewrites ONLY the buckets its
+        keys touch (lakehouse matched-file rewrite, O(batch) not
+        O(table) — at 100 TB this is the difference between a merge
+        that works and one that rewrites the world). None =
+        monolithic replace."""
         self.spark = spark
         self.store = store
         self.geo_ip = geo_ip
         self.rib_buckets = rib_buckets
-        self.family_buckets = family_buckets
 
     def _applied(self, name: str, batch_id: int) -> bool:
         return self.store.last_txn_version(name) >= batch_id
 
-    # -- per-type batch handlers ---------------------------------------
-    def unicast_prefix_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self._applied("unicast_prefix", batch_id):
+    def _rib_batch(self, name: str, batch: DataFrame, batch_id: int) -> None:
+        """One micro-batch of a RIB-shaped table: prepare, merge, then
+        stage the change log and the state concurrently in one txn."""
+        if self._applied(name, batch_id):
             return
-        from pyspark.sql import functions as F
-
-        from ..state import bucket_of
-
+        table, log_table, key, prepare, merge = _RIB_TABLES[name]
+        n = self.rib_buckets
         # materialize the parsed+deduped batch ONCE; bucket pruning,
         # the log write, and the state write all reuse it instead of
         # re-running the parse stage per job
-        src = ingest.prepare_unicast_prefix(batch).localCheckpoint()
-        if self.rib_buckets:
+        src = prepare(batch).localCheckpoint()
+        if n:
             # bucket pruning: one cheap distinct over the batch keys
             # tells us which state buckets the merge can touch (the
             # lakehouse MERGE file-pruning step)
             touched = [r[0] for r in src.select(
-                bucket_of(self.RIB_KEY, self.rib_buckets).alias("b"))
-                .distinct().collect()]
-            state = self.store.read_buckets("ip_rib", touched)
+                bucket_of(key, n).alias("b")).distinct().collect()]
+            state = self.store.read_buckets(table, touched)
         else:
-            state = self.store.read("ip_rib")
+            state = self.store.read(table)
         # materialize the merge join once: the txn writes BOTH log
         # and state, which would otherwise each re-run the full-outer
         # merge (state scan + shuffle) as separate jobs
-        new_state, log = ingest.apply_unicast_prefix(
-            state, src, prepared=True,
-            materialize_join=lambda df: df.localCheckpoint())
-        with self.store.transaction("unicast_prefix", batch_id) as txn:
+        new_state, log = merge(state, src, lambda df: df.localCheckpoint())
+        log_part = None
+        if log_table == "ip_rib_log":
             # hour partitions: Timescale 1-hour chunks (1_base.sql:367)
-            def stage_log():
-                txn.append(
-                    "ip_rib_log",
-                    log.withColumn("log_hour",
-                                   F.date_trunc("hour", "timestamp")),
-                    partition_by="log_hour")
-
+            log_part = "log_hour"
+            log = log.withColumn(log_part, F.date_trunc("hour", "timestamp"))
+        with self.store.transaction(name, batch_id) as txn:
             def stage_state():
-                if self.rib_buckets:
-                    txn.merge_buckets("ip_rib", new_state, self.RIB_KEY,
-                                      self.rib_buckets, touched)
+                if n:
+                    txn.merge_buckets(table, new_state, key, n, touched)
                 else:
-                    txn.replace("ip_rib", new_state)
+                    txn.replace(table, new_state)
 
-            _stage_concurrently(stage_log, stage_state)
+            _stage_concurrently(
+                lambda: txn.append(log_table, log, partition_by=log_part),
+                stage_state)
+
+    # -- per-type batch handlers ---------------------------------------
+    def unicast_prefix_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self._rib_batch("unicast_prefix", batch, batch_id)
 
     def base_attribute_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self._applied("base_attribute", batch_id):
@@ -137,7 +165,7 @@ class BmpStreamingIngest:
             # buckets, so this is a full rewrite either way; keep the
             # bucketed layout so later merges stay partial
             if self.rib_buckets:
-                txn.replace_bucketed("ip_rib", rib, self.RIB_KEY,
+                txn.replace_bucketed("ip_rib", rib, _IP_RIB_KEY,
                                      self.rib_buckets)
             else:
                 txn.replace("ip_rib", rib)
@@ -167,55 +195,17 @@ class BmpStreamingIngest:
         with self.store.transaction("bmp_stat", batch_id) as txn:
             txn.append("stat_reports", ingest.prepare_bmp_stat(batch))
 
-    def _rib_family_batch(self, name: str, table: str, log_table: str,
-                          apply_fn, batch: DataFrame, batch_id: int) -> None:
-        if self._applied(name, batch_id):
-            return
-        from pyspark.sql import functions as F
-
-        from ..state import bucket_of
-
-        n = self.family_buckets
-        if n:
-            # bucket key order must mirror the state-side key order
-            # exactly (Murmur3 is order-sensitive)
-            touched = [r[0] for r in batch.select(
-                bucket_of([F.col("hash"), F.col("peer_hash")], n)
-                .alias("b")).distinct().collect()]
-            state = self.store.read_buckets(table, touched)
-        else:
-            state = self.store.read(table)
-        state, log = apply_fn(
-            state, batch,
-            materialize=lambda df: df.localCheckpoint(),
-            materialize_join=lambda df: df.localCheckpoint())
-        with self.store.transaction(name, batch_id) as txn:
-            def stage_state():
-                if n:
-                    txn.merge_buckets(table, state,
-                                      ["hash_id", "peer_hash_id"], n,
-                                      touched)
-                else:
-                    txn.replace(table, state)
-
-            _stage_concurrently(lambda: txn.append(log_table, log),
-                                stage_state)
-
     def ls_node_batch(self, batch: DataFrame, batch_id: int) -> None:
-        self._rib_family_batch("ls_node", "ls_nodes", "ls_nodes_log",
-                               ingest_ls.apply_ls_node, batch, batch_id)
+        self._rib_batch("ls_node", batch, batch_id)
 
     def ls_link_batch(self, batch: DataFrame, batch_id: int) -> None:
-        self._rib_family_batch("ls_link", "ls_links", "ls_links_log",
-                               ingest_ls.apply_ls_link, batch, batch_id)
+        self._rib_batch("ls_link", batch, batch_id)
 
     def ls_prefix_batch(self, batch: DataFrame, batch_id: int) -> None:
-        self._rib_family_batch("ls_prefix", "ls_prefixes", "ls_prefixes_log",
-                               ingest_ls.apply_ls_prefix, batch, batch_id)
+        self._rib_batch("ls_prefix", batch, batch_id)
 
     def l3vpn_batch(self, batch: DataFrame, batch_id: int) -> None:
-        self._rib_family_batch("l3vpn", "l3vpn_rib", "l3vpn_rib_log",
-                               ingest_ls.apply_l3vpn, batch, batch_id)
+        self._rib_batch("l3vpn", batch, batch_id)
 
     HANDLERS = {
         "unicast_prefix": unicast_prefix_batch,
@@ -245,17 +235,9 @@ class BmpStreamingIngest:
         (ConsumerRunnable.java:253-308 is the reference shape)."""
         from ..sources.kafka import decode_kafka_records
 
-        handler = self.HANDLERS[msg_type].__get__(self)
         typed = decode_kafka_records(raw, msg_type).drop("kafka_key")
-        trigger = {"availableNow": True} if available_now \
-            else {"processingTime": trigger_interval}
-        return (
-            typed.writeStream
-            .foreachBatch(handler)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**trigger)
-            .start()
-        )
+        return self._start(msg_type, typed, checkpoint_dir, available_now,
+                           trigger_interval)
 
     def start_kafka_stream(self, msg_type: str, bootstrap_servers: str,
                            checkpoint_dir: str, **kafka_opts):
@@ -284,16 +266,21 @@ class BmpStreamingIngest:
         ``trigger_interval`` sets the micro-batch cadence for the
         continuous (``available_now=False``) mode — the freshness
         knob measured by tools/bench_latency.py."""
-        handler = self.HANDLERS[msg_type].__get__(self)
         reader = (
             self.spark.readStream.schema(MESSAGE_SCHEMAS[msg_type])
             .parquet(source_dir)
         )
+        return self._start(msg_type, reader, checkpoint_dir, available_now,
+                           trigger_interval)
+
+    def _start(self, msg_type: str, stream: DataFrame, checkpoint_dir: str,
+               available_now: bool, trigger_interval: str):
+        """``stream`` -> this message type's foreachBatch handler."""
         trigger = {"availableNow": True} if available_now \
             else {"processingTime": trigger_interval}
         return (
-            reader.writeStream
-            .foreachBatch(handler)
+            stream.writeStream
+            .foreachBatch(self.HANDLERS[msg_type].__get__(self))
             .option("checkpointLocation", checkpoint_dir)
             .trigger(**trigger)
             .start()

@@ -1,5 +1,5 @@
 """Property test for the generic column-policy merge engine
-(ingest_ls.conditional_rib_merge): random ls_node message
+(operators.merge.conditional_rib_merge): random ls_node message
 interleavings must match an independent Python interpretation of the
 same MergePolicy."""
 

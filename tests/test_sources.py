@@ -135,16 +135,21 @@ def test_l3vpn_views(spark):
             community_list="", ext_community_list="", large_community_list="",
             cluster_list="", originator_id="", nexthop_is_ipv4=True,
             timestamp=ts(0))]))
-    register_views(spark, {
+    tables = {
         "ip_rib": empty(spark, "ip_rib"), "bgp_peers": peers,
         "base_attrs": attrs, "routers": routers,
         "ip_rib_log": empty(spark, "ip_rib_log"),
         "info_asn": empty(spark, "info_asn"),
         "l3vpn_rib": state, "l3vpn_rib_log": log,
-    })
+    }
+    register_views(spark, tables)
     r = spark.sql("SELECT rd, prefix, ext_communities FROM v_l3vpn_routes").collect()
     assert len(r) == 1 and r[0].rd == "65001:100"
     assert r[0].ext_communities == "rt:65001:100"
+    assert spark.sql("SELECT * FROM v_l3vpn_routes_history").count() == 0
+    # a store whose l3vpn log was never written serves the typed empty
+    # frame: the history view must still resolve every column it reads
+    register_views(spark, dict(tables, l3vpn_rib_log=empty(spark, "l3vpn_rib_log")))
     assert spark.sql("SELECT * FROM v_l3vpn_routes_history").count() == 0
 
 def test_peeringdb_walk_offline_fixtures(spark):

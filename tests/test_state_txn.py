@@ -318,36 +318,76 @@ def test_bucketed_pipeline_matches_monolithic(spark, tmp_path):
     assert len(set(bstore.bucket_map("ip_rib").values())) > 1
 
 
-def test_bucketed_family_pipeline_matches_monolithic(spark, tmp_path):
-    """family_buckets: the LS/L3VPN handlers commit identical state
-    via partial bucket merges."""
+# message type -> (state table, log table)
+_RIB_TABLES = {
+    "unicast_prefix": ("ip_rib", "ip_rib_log"),
+    "ls_node": ("ls_nodes", "ls_nodes_log"),
+    "ls_link": ("ls_links", "ls_links_log"),
+    "ls_prefix": ("ls_prefixes", "ls_prefixes_log"),
+    "l3vpn": ("l3vpn_rib", "l3vpn_rib_log"),
+}
+
+
+def _rib_msg(mtype, i, attr, withdraw, t):
+    """A message of ``mtype`` for key ``k<i>`` on peer ``p<i % 2>``."""
+    from .test_bmp_ingest import upx
+    from .test_streaming import ls_link_msg, ls_node_msg
+
+    h, p = f"k{i}", f"p{i % 2}"
+    if mtype in ("unicast_prefix", "l3vpn"):
+        m = upx("del" if withdraw else "add", h, p, attr, t)
+        return m if mtype == "unicast_prefix" else dict(
+            m, rd="65001:100", ext_community_list="rt:65001:100")
+    if mtype == "ls_node":
+        return ls_node_msg(h, attr, withdraw, t, peer_hash=p)
+    if mtype == "ls_link":
+        return ls_link_msg(h, attr, withdraw, t, peer_hash=p)
+    return dict(hash=h, peer_hash=p, base_attr_hash=attr, sequence=1,
+                protocol="OSPFv2", prefix="10.9.0.0", prefix_len=24,
+                igp_metric=10, is_withdrawn=withdraw, timestamp=t)
+
+
+def _sorted_rows(df):
+    return sorted(repr(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("mtype", list(_RIB_TABLES))
+def test_bucketed_family_pipeline_matches_monolithic(spark, tmp_path, mtype):
+    """rib_buckets: each RIB-shaped table's handler commits identical
+    state and log rows via partial bucket merges; and the log an
+    advertise -> withdraw update emits has exactly the log table's
+    columns, in order (schema-drift guard)."""
+    from obmp_psql_spark import ingest, ingest_ls
+    from obmp_psql_spark.schemas import TABLE_SCHEMAS
     from obmp_psql_spark.streaming.pipeline import BmpStreamingIngest
 
-    from .test_bmp_ingest import msgs, ts, upx
+    from .test_bmp_ingest import empty, msgs, ts
 
-    def vpn(a, h, attr, t):
-        return dict(upx(a, h, f"p{hash(h) % 2}", attr, t),
-                    rd="65001:100", ext_community_list="rt:65001:100")
+    table, log_table = _RIB_TABLES[mtype]
+    b1 = msgs(spark, mtype, [_rib_msg(mtype, i, f"a{i}", False, ts(0, i))
+                             for i in range(16)])
+    b2 = msgs(spark, mtype, [_rib_msg(mtype, i, "", True, ts(2, i))
+                             for i in range(0, 16, 8)])
 
-    b1 = msgs(spark, "l3vpn", [vpn("add", f"v{i}", f"a{i}", ts(0, i))
-                               for i in range(16)])
-    b2 = msgs(spark, "l3vpn", [vpn("del", f"v{i}", "", ts(2, i))
-                               for i in range(0, 16, 8)])
+    apply_fn = ingest.apply_unicast_prefix if mtype == "unicast_prefix" \
+        else getattr(ingest_ls, f"apply_{mtype}")
+    state, _ = apply_fn(empty(spark, table), b1)
+    _, log = apply_fn(state, b2)
+    assert log.columns == TABLE_SCHEMAS[log_table].fieldNames()
+
     results = {}
     for tag, n in (("mono", None), ("bkt", 8)):
         store = TxnStateStore(spark, str(tmp_path / tag))
-        ing = BmpStreamingIngest(spark, store, family_buckets=n)
-        ing.l3vpn_batch(b1, 0)
-        ing.l3vpn_batch(b2, 1)
-        results[tag] = (
-            {(r.peer_hash_id, r.hash_id): (r.base_attr_hash_id, r.is_withdrawn)
-             for r in store.read("l3vpn_rib").collect()},
-            store.read("l3vpn_rib_log").count(),
-        )
+        ing = BmpStreamingIngest(spark, store, rib_buckets=n)
+        ing.HANDLERS[mtype](ing, b1, 0)
+        ing.HANDLERS[mtype](ing, b2, 1)
+        results[tag] = (_sorted_rows(store.read(table)),
+                        _sorted_rows(store.read(log_table)))
     assert results["mono"] == results["bkt"]
+    assert len(results["mono"][0]) == 16 and len(results["mono"][1]) == 2
     bstore = TxnStateStore(spark, str(tmp_path / "bkt"))
     # batch 2 touched at most 2 buckets of 8 -> partial merge happened
-    assert len(set(bstore.bucket_map("l3vpn_rib").values())) > 1
+    assert len(set(bstore.bucket_map(table).values())) > 1
 
 
 def test_time_travel_read(spark, tmp_path):
